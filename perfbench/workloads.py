@@ -22,9 +22,8 @@ WORKLOADS = {
     "relational": Workload(
         queries=(
             "profile_agg", "trend_compare", "pricing_summary",
-            "shipping_priority_sql", "nation_profit", "market_share",
-            "excess_suppliers", "join_agg", "rollup_agg", "cube_agg",
-            "salted_join", "adaptive_join", "bloom_join",
+            "shipping_priority_sql", "market_share", "join_agg",
+            "rollup_agg", "salted_join", "adaptive_join", "bloom_join",
         ),
         why=("lazy Customer-360 and TPC-H-style joins, aggregates and "
              "windows: JVM shuffle and codegen and per-query fixed costs, "
