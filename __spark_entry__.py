@@ -61,6 +61,128 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
 
 
+# --------------------------------------------------------------------------
+# fixtures of the stateful queries (streaming drains, lakes, fitted models)
+# --------------------------------------------------------------------------
+
+# (applicationId, sf_dir, name) -> what the fixture's first build returned.
+# The application is part of the key because a restarted application has
+# a fresh catalog and fresh memory sinks: it re-stages instead of reusing
+# tables that died with the old one.
+_FIXTURES: dict[tuple[str, str, str], object] = {}
+
+
+def _fixture(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object]):
+    """Run ``build()`` on the first call per (application, sf_dir, name);
+    every call returns what that first build returned. Repeated runs of a
+    query (bench best-of-2, repeated grading runs) therefore reuse its staged
+    input and drain zero new files into its converged output."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _FIXTURES:
+        _FIXTURES[key] = build()
+    return _FIXTURES[key]
+
+
+def _scratch_dir(name: str) -> str:
+    """A new scratch directory, removed at interpreter exit."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=f"c360_{name}_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def _slug(sf_dir: str) -> str:
+    """``sf_dir`` as an identifier fragment for catalog and sink names."""
+    return re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
+
+
+def _stage_batches(src: str, frames: list[DataFrame]) -> None:
+    """Write ``frames`` in order as ``src/batch<b>.parquet``: ONE coalesced
+    file per batch, its mtime pinned to ``1_700_000_000 + 10 * b``. A
+    file-source stream with ``maxFilesPerTrigger=1`` then reads exactly
+    one batch per trigger, in list order (several part files would split
+    a batch across triggers in hash-partition-dependent file order)."""
+    import glob
+    import os
+
+    os.makedirs(src)
+    for b, df in enumerate(frames):
+        stage = f"{src}.stage{b}"
+        df.coalesce(1).write.parquet(stage)
+        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+        dst = os.path.join(src, f"batch{b}.parquet")
+        os.rename(part, dst)
+        os.utime(dst, (1_700_000_000 + 10 * b,) * 2)
+
+
+def _staged_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    schema: str,
+    frames: Callable[[], list[DataFrame]],
+    tables: tuple[str, ...] = (),
+) -> tuple[str, DataFrame]:
+    """Fixture ``name``: ``frames()`` staged once into ``<root>/src`` of a
+    scratch root (caches the frames take are released after staging).
+    Returns the root, which the caller's maintainer keeps its lakes and
+    checkpoint under, and a one-file-per-trigger stream over the batches.
+    ``tables`` are the maintainer's catalog tables over lakes under the
+    root: dropped when the root is new, so none points at an older lake."""
+    import os
+
+    from bigdata_etl_customer360_spark.operators.util import cache_scope
+    from bigdata_etl_customer360_spark.streaming.windows import stream_from_parquet
+
+    def build() -> str:
+        root = _scratch_dir(name)
+        for table in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+        with cache_scope():
+            _stage_batches(os.path.join(root, "src"), frames())
+        return root
+
+    root = _fixture(spark, sf_dir, name, build)
+    src = os.path.join(root, "src")
+    return root, stream_from_parquet(spark, src, schema, max_files_per_trigger=1)
+
+
+def _memory_drain(
+    spark: SparkSession, sf_dir: str, name: str, stream: Callable[[], DataFrame]
+) -> DataFrame:
+    """Drain ``stream()`` availableNow into a memory sink on the first call
+    per (application, sf_dir, name); every call returns the sink table.
+
+    State-store sizing: a streaming query pins its state partition count
+    from spark.sql.shuffle.partitions AT QUERY START, and tune_session
+    deliberately leaves that conf alone (it would reshape every batch
+    query in the caller's session) — so the drain scopes it to 8 with a
+    try/finally restore. Here per-partition store open/commit per trigger
+    dominates (state is KB-scale): measured sf0.1 join_stream drains
+    20.2s @32 parts -> 4.9s @8 -> 3.8s @2; the vanilla 200 cost 66.8s. At
+    production state volumes this knob scales UP with state bytes, not
+    cores. Result content is partition-count independent."""
+    from bigdata_etl_customer360_spark.streaming.windows import run_available_now
+
+    tune_session(spark)
+
+    def drain() -> str:
+        df = stream()
+        table = f"{name}_graded_{_slug(sf_dir)}"
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        try:
+            run_available_now(df, table)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return table
+
+    return spark.table(_fixture(spark, sf_dir, name, drain))
+
+
 def _copurchase_edges(
     spark: SparkSession, sf_dir: str, directed: bool = False
 ) -> DataFrame:
@@ -376,36 +498,21 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INC_LAKE_DIRS: dict[str, str] = {}
-
-
-def _inc_lake_dir(sf_dir: str) -> str:
-    """One session-scoped scratch lake per sf_dir, removed at exit —
-    repeated invocations (bench best-of-2, driver re-runs) overwrite the
-    same partitions instead of leaking a fresh full-table copy per call
-    (the overwrite is what the query is proving anyway)."""
-    if sf_dir not in _INC_LAKE_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="c360_inc_lake_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _INC_LAKE_DIRS[sf_dir] = d
-    return _INC_LAKE_DIRS[sf_dir]
-
-
 def q_incremental_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idempotent daily-rerun pattern (the reference's operating model,
     ETL_customer_behavior.py:161-166): land events date-partitioned, then
     RE-land an overlapping window via dynamic partition overwrite, then
     aggregate the lake. The result equals aggregating the source directly
     (the oracle) iff the re-run replaced partitions instead of
-    double-counting (append) or truncating (static overwrite)."""
+    double-counting (append) or truncating (static overwrite). The lake
+    is one scratch fixture per sf_dir: repeated invocations (bench
+    best-of-2, repeated grading runs) overwrite the same partitions instead of
+    leaking a fresh full-table copy per call (the overwrite is what the
+    query is proving anyway)."""
     from bigdata_etl_customer360_spark.sources.sinks import write_partitioned_overwrite
 
     ev = _t(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    lake = _inc_lake_dir(sf_dir)
+    lake = _fixture(spark, sf_dir, "inc_lake", lambda: _scratch_dir("inc_lake"))
     write_partitioned_overwrite(ev, lake, ["event_date"])
     # overlapping re-run: every even-numbered day lands a second time
     write_partitioned_overwrite(
@@ -470,9 +577,6 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_cluster_canonical(docs, pairs).select("doc_id", "lang", "source")
 
 
-_BUCKETED_DOCS: dict[str, str] = {}
-
-
 def q_dedup_ladder_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_cluster's ladder fed from a doc_id-BUCKETED corpus: the
     write-time bucket shuffle replaces every id-keyed Exchange the ladder
@@ -488,21 +592,14 @@ def q_dedup_ladder_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    table = "c360_docs_bucketed_" + re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
-    # probe the CATALOG, not just the module dict: a new SparkSession in
-    # the same process has a fresh in-memory catalog and the cached
-    # "already written" answer would point at a table that no longer exists
-    if _BUCKETED_DOCS.get(sf_dir) != table or not spark.catalog.tableExists(table):
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="c360_bucketed_docs_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        write_bucketed(
-            _t(spark, sf_dir, "documents"), table, "doc_id", buckets=32, path=d
-        )
-        _BUCKETED_DOCS[sf_dir] = table
+    table = "c360_docs_bucketed_" + _slug(sf_dir)
+    _fixture(
+        spark, sf_dir, "docs_bucketed",
+        lambda: write_bucketed(
+            _t(spark, sf_dir, "documents"), table, "doc_id", buckets=32,
+            path=_scratch_dir("docs_bucketed"),
+        ),
+    )
     docs_b = read_bucketed(spark, table)
     pairs = ngram_jaccard_pairs(docs_b, threshold=0.3)
     return keep_cluster_canonical(docs_b, pairs).select("doc_id", "lang", "source")
@@ -887,9 +984,6 @@ def q_ivfpq_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_INDEX_DIRS: dict[str, str] = {}
-
-
 def q_ivfpq_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAINTAINED IVF×PQ index graded end-to-end (operators/ann_index —
     VERDICT r14 task 2: at 100 TB the index is the asset, not a per-query
@@ -917,17 +1011,12 @@ def q_ivfpq_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_index_build,
     )
 
-    table = "c360_ivfpq_idx_" + re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
+    table = "c360_ivfpq_idx_" + _slug(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVFPQ_INDEX_DIRS:
-        import atexit
-        import shutil
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="c360_ivfpq_idx_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build() -> str:
+        path = os.path.join(_scratch_dir("ivfpq_idx"), "codes")
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        path = os.path.join(root, "codes")
         ivfpq_index_build(
             spark,
             emb.filter(F.col("vec_id") % 2 == 0),
@@ -939,12 +1028,13 @@ def q_ivfpq_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_index_append(
             spark, emb.filter(F.col("vec_id") % 2 == 1), table, path
         )
-        _IVFPQ_INDEX_DIRS[sf_dir] = root
+        return path
+
     return cosine_topk_ivfpq_from_index(
         spark,
         emb.filter(F.col("vec_id") < 10),
         table,
-        os.path.join(_IVFPQ_INDEX_DIRS[sf_dir], "codes"),
+        _fixture(spark, sf_dir, "ivfpq_index", build),
         k=5,
         nprobe=16,
         rerank=1_000_000,
@@ -3040,23 +3130,18 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train(docs, num_merges=30)
 
 
-_TAR_SHARD_DIRS: dict[str, str] = {}
-
-
 def _tar_shard_dir(spark: SparkSession, sf_dir: str) -> str:
     """Planted WebDataset-style archive per sf_dir (removed at exit):
     docs 0..39 packed into two tar shards (member ``<doc_id>.txt``,
     even/odd split) — a bounded 40-row driver collect building the
     fixture the tar-ingest query reads back distributed."""
-    if sf_dir not in _TAR_SHARD_DIRS:
-        import atexit
+
+    def build() -> str:
         import io
         import os
-        import shutil
         import tarfile
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="c360_tar_shards_")
+        d = _scratch_dir("tar_shards")
         rows = sorted(
             (r["doc_id"], r["text"])
             for r in _t(spark, sf_dir, "documents")
@@ -3074,9 +3159,9 @@ def _tar_shard_dir(spark: SparkSession, sf_dir: str) -> str:
                     info.size = len(data)
                     info.mtime = 0
                     tf.addfile(info, io.BytesIO(data))
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _TAR_SHARD_DIRS[sf_dir] = d
-    return _TAR_SHARD_DIRS[sf_dir]
+        return d
+
+    return _fixture(spark, sf_dir, "tar_shards", build)
 
 
 def q_multimodal_tar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3236,6 +3321,36 @@ def q_cooccur_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cooccur_stats(docs, min_pair_docs=5, top_k=100)
 
 
+def _id_batches(hi: int) -> list[Column]:
+    """Predicates of three ascending ``doc_id`` ranges covering [0, hi]."""
+    cut = (int(hi) + 3) // 3
+    doc_id = F.col("doc_id")
+    return [(doc_id >= b * cut) & (doc_id < (b + 1) * cut) for b in range(3)]
+
+
+def _recrawl_history(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Column]]:
+    """The planted re-crawl history of the incremental-dedup queries: the
+    documents corpus + an exact re-crawl (+10000) + a twice-ingested
+    ' v2' version (+11000/+12000), and the predicates of its three ordered
+    id-range batches (ordered batching makes first-seen == min-id). The
+    id ceiling derives from the base table (union max == base max + the
+    largest offset). The history is returned uncached: each caller
+    decides its own caching."""
+    base = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
+    docs = base
+    for off, suffix in ((10000, ""), (11000, " v2"), (12000, " v2")):
+        docs = docs.unionByName(
+            base.select(
+                (F.col("doc_id") + F.lit(off)).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(suffix)).alias("text"),
+                "lang",
+                "source",
+            )
+        )
+    hi = (base.agg(F.max("doc_id")).first()[0] or 0) + 12000
+    return docs, _id_batches(hi)
+
+
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-dedup certificate (operators/dedup.dedup_incremental):
     the corpus plus an exact re-crawl (+10000, same text — must be
@@ -3251,29 +3366,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_fingerprints,
     )
 
-    base = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    docs = base
-    for off, suffix in ((10000, ""), (11000, " v2"), (12000, " v2")):
-        docs = docs.unionByName(
-            base.select(
-                (F.col("doc_id") + F.lit(off)).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(suffix)).alias("text"),
-                "lang",
-                "source",
-            )
-        )
-    hi = docs.agg(F.max("doc_id")).first()[0] or 0
-    cut = (int(hi) + 3) // 3
+    docs, batches = _recrawl_history(spark, sf_dir)
     seen = None
     outs = []
-    for b in range(3):
-        batch = docs.filter(
-            (F.col("doc_id") >= b * cut) & (F.col("doc_id") < (b + 1) * cut)
-        )
+    for in_batch in batches:
         survivors = dedup_incremental(
-            batch, seen, id_col="doc_id", seen_is_distinct=True
+            docs.filter(in_batch), seen, id_col="doc_id", seen_is_distinct=True
         )
         outs.append(survivors)
         # assume_distinct + no union-distinct (r17): survivors carry one
@@ -3306,10 +3404,7 @@ def q_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs and driver re-grades fold the identical three batches.
     Plan pinned by tests/test_plans.py::
     test_bucketed_seen_lake_antijoin_has_no_lake_side_exchange."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from bigdata_etl_customer360_spark.operators.dedup import (
         dedup_incremental,
@@ -3318,36 +3413,17 @@ def q_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_etl_customer360_spark.operators.util import scoped_cache
     from bigdata_etl_customer360_spark.sources.bucketed import seen_fold_bucketed
 
-    base = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    docs = base
-    for off, suffix in ((10000, ""), (11000, " v2"), (12000, " v2")):
-        docs = docs.unionByName(
-            base.select(
-                (F.col("doc_id") + F.lit(off)).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(suffix)).alias("text"),
-                "lang",
-                "source",
-            )
-        )
+    docs, batches = _recrawl_history(spark, sf_dir)
     # constructed-corpus multi-consumer rule (verify SKILL): docs feeds
-    # three filtered batch pipelines — cache it; the id ceiling derives
-    # from the base table (union max == base max + the largest offset)
+    # three filtered batch pipelines — cache it
     docs = scoped_cache(docs)
-    table = "c360_seen_fp_" + re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
+    table = "c360_seen_fp_" + _slug(sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    root = tempfile.mkdtemp(prefix="c360_seen_lake_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    hi = (base.agg(F.max("doc_id")).first()[0] or 0) + 12000
-    cut = (int(hi) + 3) // 3
-    for b in range(3):
-        batch = docs.filter(
-            (F.col("doc_id") >= b * cut) & (F.col("doc_id") < (b + 1) * cut)
-        )
+    root = _scratch_dir("seen_lake")
+    for b, in_batch in enumerate(batches):
         seen = spark.table(table) if spark.catalog.tableExists(table) else None
         survivors = dedup_incremental(
-            batch, seen, id_col="doc_id", seen_is_distinct=True
+            docs.filter(in_batch), seen, id_col="doc_id", seen_is_distinct=True
         )
         survivors.write.parquet(os.path.join(root, f"batch={b}"))
         # assume_distinct/fps_is_distinct (r17): survivors are one row
@@ -3369,7 +3445,25 @@ def q_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source")
 
 
-_DEDUP_STREAM_DIRS: dict[str, str] = {}
+# stream schema of the dedup_stream* fixtures' document batches
+_DOC_STREAM_SCHEMA = "doc_id long, text string, lang string, source string"
+
+
+def _recrawl_stream(
+    spark: SparkSession, sf_dir: str, name: str, tables: tuple[str, ...] = ()
+) -> tuple[str, DataFrame]:
+    """Fixture ``name`` (see _staged_stream): the re-crawl history staged
+    as its three ordered id-range batches."""
+    from bigdata_etl_customer360_spark.operators.util import scoped_cache
+
+    def frames() -> list[DataFrame]:
+        docs, batches = _recrawl_history(spark, sf_dir)
+        # constructed-corpus multi-consumer rule (verify SKILL): docs
+        # feeds three filtered writes — cache it
+        docs = scoped_cache(docs)
+        return [docs.filter(in_batch) for in_batch in batches]
+
+    return _staged_stream(spark, sf_dir, name, _DOC_STREAM_SCHEMA, frames, tables)
 
 
 def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3384,94 +3478,26 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints folded back. The returned survivor lake must hash-match
     the ONE-PASS dedup_exact oracle over the concatenated history —
     proving the streaming maintainer's invariant end-to-end (ordered
-    batching makes first-seen == min-id). Scratch dirs are session-scoped
+    batching makes first-seen == min-id). Scratch dirs are a fixture
     (bench best-of-2 re-runs drain zero new files and re-read the
     converged lake). Generalizes the reference's batch-only daily ingest
     (ETL_customer_behavior.py:160-204) to a continuous dedup frontier."""
     import os
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from bigdata_etl_customer360_spark.streaming.windows import (
         stream_dedup_incremental,
-        stream_from_parquet,
     )
 
-    if sf_dir not in _DEDUP_STREAM_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_dedup_stream_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-
-        from bigdata_etl_customer360_spark.operators.util import scoped_cache
-
-        base = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        docs = base
-        for off, suffix in ((10000, ""), (11000, " v2"), (12000, " v2")):
-            docs = docs.unionByName(
-                base.select(
-                    (F.col("doc_id") + F.lit(off)).alias("doc_id"),
-                    F.concat(F.col("text"), F.lit(suffix)).alias("text"),
-                    "lang",
-                    "source",
-                )
-            )
-        # constructed-corpus multi-consumer rule (verify SKILL): docs feeds
-        # three filtered writes — cache it, and derive the id ceiling from
-        # the base table (union max == base max + the largest offset)
-        docs = scoped_cache(docs)
-        hi = (base.agg(F.max("doc_id")).first()[0] or 0) + 12000
-        cut = (int(hi) + 3) // 3
-        for b in range(3):
-            stage = os.path.join(root, f"stage{b}")
-            # coalesce(1): ONE file per id-range batch, so mtime order ==
-            # batch order == ascending ids (first-seen == min-id; multiple
-            # part files would split a batch across triggers with
-            # hash-partition-dependent file order)
-            docs.filter(
-                (F.col("doc_id") >= b * cut) & (F.col("doc_id") < (b + 1) * cut)
-            ).coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b, 1_700_000_000 + 10 * b))
-        _DEDUP_STREAM_DIRS[sf_dir] = root
-
-    root = _DEDUP_STREAM_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
+    root, stream = _recrawl_stream(spark, sf_dir, "dedup_stream")
     survivors_path = os.path.join(root, "survivors")
     stream_dedup_incremental(
-        stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        ),
+        stream,
         os.path.join(root, "seen_fp"),
         survivors_path,
         os.path.join(root, "ckpt"),
         query_name="dedup_stream_graded",
     )
     return spark.read.parquet(survivors_path).select("doc_id", "lang", "source")
-
-
-_DEDUP_STREAM_BUCKETED_DIRS: dict[str, str] = {}
 
 
 def q_dedup_stream_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3495,79 +3521,15 @@ def q_dedup_stream_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py (the *_bucketed_* quartet)."""
     import os
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from bigdata_etl_customer360_spark.streaming.windows import (
         stream_dedup_incremental_bucketed,
-        stream_from_parquet,
     )
 
-    table = "c360_stream_seen_" + re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
-    if sf_dir not in _DEDUP_STREAM_BUCKETED_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_dedup_stream_bkt_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-
-        from bigdata_etl_customer360_spark.operators.util import scoped_cache
-
-        base = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        docs = base
-        for off, suffix in ((10000, ""), (11000, " v2"), (12000, " v2")):
-            docs = docs.unionByName(
-                base.select(
-                    (F.col("doc_id") + F.lit(off)).alias("doc_id"),
-                    F.concat(F.col("text"), F.lit(suffix)).alias("text"),
-                    "lang",
-                    "source",
-                )
-            )
-        # constructed-corpus multi-consumer rule (verify SKILL): docs feeds
-        # three filtered writes — cache it, and derive the id ceiling from
-        # the base table (union max == base max + the largest offset)
-        docs = scoped_cache(docs)
-        hi = (base.agg(F.max("doc_id")).first()[0] or 0) + 12000
-        cut = (int(hi) + 3) // 3
-        for b in range(3):
-            stage = os.path.join(root, f"stage{b}")
-            # coalesce(1): ONE file per id-range batch, so mtime order ==
-            # batch order == ascending ids (first-seen == min-id)
-            docs.filter(
-                (F.col("doc_id") >= b * cut) & (F.col("doc_id") < (b + 1) * cut)
-            ).coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b, 1_700_000_000 + 10 * b))
-        _DEDUP_STREAM_BUCKETED_DIRS[sf_dir] = root
-
-    root = _DEDUP_STREAM_BUCKETED_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
+    table = "c360_stream_seen_" + _slug(sf_dir)
+    root, stream = _recrawl_stream(spark, sf_dir, "dedup_stream_bkt", (table,))
     survivors_path = os.path.join(root, "survivors")
     stream_dedup_incremental_bucketed(
-        stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        ),
+        stream,
         table,
         survivors_path,
         os.path.join(root, "ckpt"),
@@ -3576,9 +3538,6 @@ def q_dedup_stream_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name="dedup_stream_bucketed_graded",
     )
     return spark.read.parquet(survivors_path).select("doc_id", "lang", "source")
-
-
-_DEDUP_STREAM_NEARDUP_DIRS: dict[str, str] = {}
 
 
 def q_dedup_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3603,41 +3562,18 @@ def q_dedup_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-crawl is the EXACT tiers' job — dedup_stream catches it).
     Ordered batching makes arrival order == id order, so the streaming
     "any earlier doc" rule equals the oracle's smaller-id rule. Scratch
-    dirs/tables are session-scoped (bench re-runs drain zero new files
-    and re-read the converged lake)."""
+    dirs/tables are a fixture (bench re-runs drain zero new files and
+    re-read the converged lake)."""
     import os
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from bigdata_etl_customer360_spark.streaming.windows import stream_dedup_neardup
 
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        stream_dedup_neardup,
-        stream_from_parquet,
-    )
-
-    slug = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
+    slug = _slug(sf_dir)
     bands_table = "c360_neardup_bands_" + slug
     sigs_table = "c360_neardup_sigs_" + slug
-    if sf_dir not in _DEDUP_STREAM_NEARDUP_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="c360_dedup_stream_nd_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {bands_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {sigs_table}")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-
-        base = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
+    def frames() -> list[DataFrame]:
+        base = _t(spark, sf_dir, "documents")
         # three id-ordered batches on FIXED boundaries (base ids stay
         # below 10000 at every SF): base crawl, exact re-crawl, near-dup
         # ' v2' re-crawl — the near tier's raison d'être: the exact
@@ -3647,36 +3583,23 @@ def q_dedup_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (10000, F.col("text")),
             (20000, F.concat(F.col("text"), F.lit(" v2"))),
         )
-        for b, (off, text) in enumerate(variants):
-            stage = os.path.join(root, f"stage{b}")
-            # coalesce(1): ONE file per batch, so mtime order == batch
-            # order == ascending ids (first-seen == min-id)
+        return [
             base.select(
                 (F.col("doc_id") + F.lit(off)).alias("doc_id"),
                 text.alias("text"),
                 "lang",
                 "source",
-            ).coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b, 1_700_000_000 + 10 * b))
-        _DEDUP_STREAM_NEARDUP_DIRS[sf_dir] = root
-
-    root = _DEDUP_STREAM_NEARDUP_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
+            )
+            for off, text in variants
         ]
+
+    root, stream = _staged_stream(
+        spark, sf_dir, "dedup_stream_nd", _DOC_STREAM_SCHEMA, frames,
+        (bands_table, sigs_table),
     )
     survivors_path = os.path.join(root, "survivors")
     stream_dedup_neardup(
-        stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        ),
+        stream,
         bands_table,
         sigs_table,
         survivors_path,
@@ -3690,9 +3613,6 @@ def q_dedup_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name="dedup_stream_neardup_graded",
     )
     return spark.read.parquet(survivors_path).select("doc_id", "lang", "source")
-
-
-_DEDUP_STREAM_SEM_DIRS: dict[str, str] = {}
 
 
 def q_dedup_stream_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3714,38 +3634,16 @@ def q_dedup_stream_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered batching makes arrival order == id order, and every
     variant's construction (reverse / x*1.25 / -x on DOUBLEs) is
     element-wise exact on both engines, so streaming == batch
-    hash-exactly. Scratch is session-scoped."""
+    hash-exactly. Scratch is a fixture."""
     import os
 
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from bigdata_etl_customer360_spark.streaming.windows import stream_dedup_semantic
 
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        stream_dedup_semantic,
-        stream_from_parquet,
-    )
-
-    slug = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))
+    slug = _slug(sf_dir)
     vecs_table = "c360_sem_vecs_" + slug
     ids_table = "c360_sem_ids_" + slug
-    if sf_dir not in _DEDUP_STREAM_SEM_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="c360_dedup_stream_sem_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {vecs_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {ids_table}")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-
+    def frames() -> list[DataFrame]:
         base = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
         variants = [
@@ -3764,37 +3662,28 @@ def q_dedup_stream_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         # three id-ordered batches: base crawl; exact re-crawl + reversed
         # (new directions); scaled re-encodes + negated (new directions)
         batches = [(0,), (10000, 11000), (20000, 21000)]
-        frames = {
+        by_off = {
             off: base.select(
                 (F.col("vec_id") + F.lit(off)).alias("vec_id"),
                 expr.alias("embedding"),
             )
             for off, expr in variants
         }
-        for b, offs in enumerate(batches):
-            df = frames[offs[0]]
+        out = []
+        for offs in batches:
+            df = by_off[offs[0]]
             for off in offs[1:]:
-                df = df.unionByName(frames[off])
-            stage = os.path.join(root, f"stage{b}")
-            df.coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b, 1_700_000_000 + 10 * b))
-        _DEDUP_STREAM_SEM_DIRS[sf_dir] = root
+                df = df.unionByName(by_off[off])
+            out.append(df)
+        return out
 
-    root = _DEDUP_STREAM_SEM_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-        ]
+    root, stream = _staged_stream(
+        spark, sf_dir, "dedup_stream_sem", "vec_id long, embedding array<double>",
+        frames, (vecs_table, ids_table),
     )
     survivors_path = os.path.join(root, "survivors")
     stream_dedup_semantic(
-        stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        ),
+        stream,
         vecs_table,
         ids_table,
         survivors_path,
@@ -3816,9 +3705,6 @@ def q_dedup_stream_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return surv.select("vec_id", bucket.alias("bucket"))
 
 
-_COMPACT_DIRS: dict[str, str] = {}
-
-
 def q_compact_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction graded end-to-end (sources/layout.
     compact_parquet — VERDICT r13 task 7 candidate): the documents table
@@ -3830,31 +3716,24 @@ def q_compact_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to storage (a compaction that moves/dupes/drops one row is
     corrupt regardless of its file counts). files_before > files_after
     is asserted in-query; file-count math and crashed-swap recovery are
-    pinned by tests/test_layout.py. Scratch is session-scoped (bench
-    re-runs re-read the compacted copy)."""
+    pinned by tests/test_layout.py. Scratch is a fixture (bench re-runs
+    re-read the compacted copy)."""
+    import os
+
     from bigdata_etl_customer360_spark.sources.layout import compact_parquet
 
-    if sf_dir not in _COMPACT_DIRS:
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_compact_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        data = os.path.join(root, "docs")
+    def build() -> str:
+        data = os.path.join(_scratch_dir("compact"), "docs")
         _t(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source"
         ).repartition(64).write.parquet(data)
         stats = compact_parquet(spark, data, target_bytes=1 << 30)
         assert stats["files_after"] < stats["files_before"], stats
-        _COMPACT_DIRS[sf_dir] = data
-    return spark.read.parquet(_COMPACT_DIRS[sf_dir]).select(
+        return data
+
+    return spark.read.parquet(_fixture(spark, sf_dir, "compact", build)).select(
         "doc_id", "text", "lang", "source"
     )
-
-
-_ZORDER_DIRS: dict[str, str] = {}
 
 
 def q_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3867,19 +3746,14 @@ def q_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturb one double. The scale claim this layout buys (BOTH filter
     dimensions prune row groups via parquet min/max stats, vs a 1-D sort
     pruning only its leading column) is pinned by tests/test_layout.py::
-    test_zordered_write_prunes_both_dimensions. Scratch is
-    session-scoped; the rewrite is one range-partitioned sorted write."""
+    test_zordered_write_prunes_both_dimensions. Scratch is a fixture;
+    the rewrite is one range-partitioned sorted write."""
+    import os
+
     from bigdata_etl_customer360_spark.sources.layout import write_zordered
 
-    if sf_dir not in _ZORDER_DIRS:
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_zorder_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        data = os.path.join(root, "orders_z")
+    def build() -> str:
+        data = os.path.join(_scratch_dir("zorder"), "orders_z")
         write_zordered(
             _t(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_custkey", "o_totalprice"
@@ -3887,9 +3761,10 @@ def q_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             data,
             ["o_custkey", "o_totalprice"],
         )
-        _ZORDER_DIRS[sf_dir] = data
+        return data
+
     return (
-        spark.read.parquet(_ZORDER_DIRS[sf_dir])
+        spark.read.parquet(_fixture(spark, sf_dir, "zorder", build))
         .filter(
             (F.col("o_custkey") <= 100)
             & F.col("o_totalprice").between(50000.0, 150000.0)
@@ -4323,23 +4198,20 @@ def _tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TREE_MODELS: dict[str, list] = {}
-
-
 def _tree_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-once-per-sf cache (the _unigram_model precedent): the bench
+    """Train-once-per-sf fixture (the _unigram_model precedent): the bench
     runs tree_train and tree_eval in one session; eval must not pay a
     second fit."""
     from bigdata_etl_customer360_spark.operators.ml import tree_fit
 
-    if sf_dir not in _TREE_MODELS:
-        model = tree_fit(
+    def fit() -> list:
+        return tree_fit(
             _tree_features(spark, sf_dir), ["qty", "disc", "tax"], "flag",
             max_depth=2,
-        )
-        _TREE_MODELS[sf_dir] = model.collect()
+        ).collect()
+
     return spark.createDataFrame(
-        _TREE_MODELS[sf_dir],
+        _fixture(spark, sf_dir, "tree_model", fit),
         "node_id long, depth int, n long, split_feature string, "
         "split_value double, prediction string",
     )
@@ -4431,26 +4303,23 @@ def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts.unionByName(hubs)
 
 
-_UNIGRAM_MODELS: dict[str, list] = {}
-
-
 def _unigram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-once-per-sf cache for the unigram tokenizer model (the
+    """Train-once-per-sf fixture for the unigram tokenizer model (the
     bench runs unigram_train and unigram_tokenize in one session; the
     encode query must not pay a second EM fit)."""
     from bigdata_etl_customer360_spark.operators.textstats import unigram_lm_train
 
-    if sf_dir not in _UNIGRAM_MODELS:
-        model = unigram_lm_train(
+    def fit() -> list:
+        return unigram_lm_train(
             _t(spark, sf_dir, "documents"),
             vocab_size=60,
             seed_vocab_size=200,
             em_iters=3,
             max_piece_len=5,
-        )
-        _UNIGRAM_MODELS[sf_dir] = model.collect()
+        ).collect()
+
     return spark.createDataFrame(
-        _UNIGRAM_MODELS[sf_dir], "piece string, logprob double"
+        _fixture(spark, sf_dir, "unigram_model", fit), "piece string, logprob double"
     )
 
 
@@ -4754,9 +4623,6 @@ def q_bloom_semi_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLOOM_STREAM_LAKES: dict[tuple[str, str], str] = {}
-
-
 def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-MAINTAINED Bloom filter (the hh_stream pattern applied to
     membership): the agg-stream fixture drains availableNow through
@@ -4772,42 +4638,17 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touches the filter."""
     import os
 
+    from bigdata_etl_customer360_spark.operators.quality import (
+        bloom_build,
+        bloom_merge,
+    )
+
     tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _BLOOM_STREAM_LAKES:
-        import atexit
-        import shutil
-        import tempfile
 
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-            TimestampType,
-        )
-
-        from bigdata_etl_customer360_spark.operators.quality import bloom_build
-        from bigdata_etl_customer360_spark.streaming.windows import (
-            stream_from_parquet,
-        )
-
-        root = _agg_stream_fixture(spark, sf_dir)
-        lake = tempfile.mkdtemp(prefix="c360_bloom_lake_")
-        atexit.register(shutil.rmtree, lake, ignore_errors=True)
+    def drain() -> str:
+        stream = _agg_stream(spark, sf_dir)
+        lake = _scratch_dir("bloom_lake")
         lake_dir = os.path.join(lake, "words")
-        schema = StructType(
-            [
-                StructField("user_id", LongType()),
-                StructField("ts", TimestampType()),
-                StructField("event_type", StringType()),
-                StructField("value", DoubleType()),
-            ]
-        )
-        stream = stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        )
 
         def fold_batch(batch_df, batch_id: int) -> None:
             members = batch_df.filter(
@@ -4824,11 +4665,9 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _BLOOM_STREAM_LAKES[cache_key] = lake_dir
+        return lake_dir
 
-    from bigdata_etl_customer360_spark.operators.quality import bloom_merge
-
-    return bloom_merge(spark.read.parquet(_BLOOM_STREAM_LAKES[cache_key]))
+    return bloom_merge(spark.read.parquet(_fixture(spark, sf_dir, "bloom_stream", drain)))
 
 
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5227,9 +5066,6 @@ def q_seasonal_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seasonal_index(orders, "o_orderdate", "o_totalprice")
 
 
-_HH_STREAM_DIRS: dict[str, str] = {}
-
-
 def q_hh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming frequent-items maintenance graded end-to-end
     (streaming/windows.stream_heavy_hitters): the documents token
@@ -5241,60 +5077,37 @@ def q_hh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts. Result == batch heavy_hitters == the plain group-count SQL
     — the SAME oracle string as the batch query (one ground truth, two
     execution models, like join_stream/interval_join). Scratch dirs
-    session-scoped: bench re-runs drain zero new files and re-read the
+    are a fixture: bench re-runs drain zero new files and re-read the
     converged lake+summary. Capacity 64 > denom 30 keeps the
     no-false-negative guarantee while the 31-token vocab forces real
     decrements per batch."""
     import os
-
-    tune_session(spark)
-
-    from pyspark.sql.types import StringType, StructField, StructType
 
     from bigdata_etl_customer360_spark.operators.textstats import (
         word_tokens_expr,
     )
     from bigdata_etl_customer360_spark.streaming.windows import (
         heavy_hitters_from_lake,
-        stream_from_parquet,
         stream_heavy_hitters,
     )
 
-    if sf_dir not in _HH_STREAM_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
+    tune_session(spark)
 
-        root = tempfile.mkdtemp(prefix="c360_hh_stream_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        src = os.path.join(root, "src")
-        os.makedirs(src)
+    def frames() -> list[DataFrame]:
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        hi = int(docs.agg(F.max("doc_id")).first()[0] or 0)
-        cut = (hi + 3) // 3
-        for b in range(3):
-            stage = os.path.join(root, f"stage{b}")
-            docs.filter(
-                (F.col("doc_id") >= b * cut)
-                & (F.col("doc_id") < (b + 1) * cut)
-            ).select(
+        hi = docs.agg(F.max("doc_id")).first()[0] or 0
+        return [
+            docs.filter(in_batch).select(
                 F.explode(word_tokens_expr("text")).alias("token")
-            ).coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b,) * 2)
-        _HH_STREAM_DIRS[sf_dir] = root
+            )
+            for in_batch in _id_batches(hi)
+        ]
 
-    root = _HH_STREAM_DIRS[sf_dir]
-    schema = StructType([StructField("token", StringType())])
+    root, stream = _staged_stream(spark, sf_dir, "hh_stream", "token string", frames)
     lake = os.path.join(root, "lake")
     summary = os.path.join(root, "summary")
     stream_heavy_hitters(
-        stream_from_parquet(
-            spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-        ),
+        stream,
         lake,
         summary,
         os.path.join(root, "ckpt"),
@@ -5305,10 +5118,82 @@ def q_hh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters_from_lake(spark, lake, summary, "token", denom=30)
 
 
-_JOIN_STREAM_DIRS: dict[str, str] = {}
-_JOIN_STREAM_SEQ = [0]
-# (applicationId, sf_dir) -> drained memory-sink table name
-_JOIN_STREAM_TABLES: dict[tuple[str, str, str], str] = {}
+# stream schema of the join-stream fixture's click and view batches
+_JOIN_STREAM_SCHEMA = "user_id long, ts timestamp, value double"
+
+
+def _ts_terciles(lo: int, hi: int) -> list[Column]:
+    """Predicates of three time-ordered ``ts`` ranges covering the epoch
+    micros [lo, hi]."""
+    c1, c2 = (lo + (hi - lo + 1) * k // 3 for k in (1, 2))
+    us = F.unix_micros("ts")
+    return [us < c1, (us >= c1) & (us < c2), us >= c2]
+
+
+def _join_stream_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Click and view streams of the join-stream fixture, built once per
+    (application, sf_dir): per side, three TIME-ORDERED ts-tercile
+    batches and then two far-future sentinel batches, one file per
+    trigger. See q_join_stream for the mechanism.
+
+    Why the sentinels (the q_agg_stream mechanism, here for the
+    LEFT-OUTER drain): the global watermark is the MIN over both
+    streams' watermarks, so BOTH sides carry one. TWO sentinel batches
+    per side, because join-state eviction applies the watermark
+    computed from the PREVIOUS batch's max event time — batch 4 is the
+    data batch in which the batch-3-derived far-future watermark evicts
+    every real left row and emits the unmatched ones with NULLs
+    (availableNow does not reliably run a trailing no-data batch for
+    join state). Distinct negative user ids (-1 clicks / -2 views) can
+    never match anything, so the INNER drain's result is unchanged; the
+    outer drains filter them out."""
+    import os
+
+    from bigdata_etl_customer360_spark.operators.util import cache_scope, scoped_cache
+    from bigdata_etl_customer360_spark.streaming.windows import stream_from_parquet
+
+    def build() -> str:
+        root = _scratch_dir("join_stream")
+        with cache_scope():
+            # one cached 4-column projection feeds the min/max probe and
+            # all six tercile writes (uncached: 7 full events scans
+            # dominate the one-time fixture build)
+            ev = scoped_cache(
+                _t(spark, sf_dir, "events")
+                .select("user_id", "ts", "value", "event_type")
+                .filter(F.col("event_type").isin("click", "view"))
+            )
+            lo, hi = ev.agg(
+                F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+            ).first()
+            for side, uid in (("click", -1), ("view", -2)):
+                rows = ev.filter(F.col("event_type") == side)
+                sentinels = [
+                    spark.createDataFrame(
+                        [(uid, int(hi) + days * 86400 * 1_000_000, 0.0)],
+                        "user_id long, us long, value double",
+                    ).select(
+                        "user_id", F.timestamp_micros(F.col("us")).alias("ts"), "value"
+                    )
+                    for days in (40, 41)
+                ]
+                _stage_batches(
+                    os.path.join(root, side),
+                    [
+                        rows.filter(in_batch).select("user_id", "ts", "value")
+                        for in_batch in _ts_terciles(lo, hi)
+                    ]
+                    + sentinels,
+                )
+        return root
+
+    root = _fixture(spark, sf_dir, "join_stream_source", build)
+    return tuple(
+        stream_from_parquet(
+            spark, os.path.join(root, side), _JOIN_STREAM_SCHEMA, max_files_per_trigger=1
+        )
+        for side in ("click", "view")
+    )
 
 
 def q_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5321,21 +5206,13 @@ def q_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     no longer match — the drained result must equal the batch join
     EXACTLY, so the oracle is the same quadratic SQL that grades
     `interval_join` (one ground truth, two execution models: that pair
-    is the point). Scratch dirs AND the drained sink are session-scoped:
+    is the point). Scratch dirs AND the drained sink are fixtures:
     the first call per (app, sf_dir) runs the real availableNow drain
     from zero (no checkpoint — deterministic), later calls return the
     already-drained memory-sink table (the dedup_stream converged-lake
     convention; bench warmup does the streaming work, the timed pass
-    reads the sink). State-store sizing: a streaming query pins its
-    state partition count from spark.sql.shuffle.partitions AT QUERY
-    START, and tune_session deliberately leaves that conf alone (it
-    would reshape every batch query in the driver's session) — so this
-    query scopes it to 8 around the drain with a try/finally restore.
-    Here per-partition store open/commit per trigger dominates (state is
-    KB-scale): measured sf0.1 drains 20.2s @32 parts -> 4.9s @8 -> 3.8s
-    @2; the vanilla 200 cost 66.8s. At production state volumes this
-    knob scales UP with state bytes, not cores. Result content is
-    partition-count independent."""
+    reads the sink). State partitions are scoped to 8 around the drain
+    (see _memory_drain)."""
     return _join_stream_drain(spark, sf_dir, "inner")
 
 
@@ -5380,148 +5257,77 @@ def _drop_join_sentinels(df: DataFrame) -> DataFrame:
 def _join_stream_drain(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    import os
-
-    tune_session(spark)
-
-    cache_key = (spark.sparkContext.applicationId, sf_dir, how)
-    if cache_key in _JOIN_STREAM_TABLES:
-        return _drop_join_sentinels(spark.table(_JOIN_STREAM_TABLES[cache_key]))
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from bigdata_etl_customer360_spark.streaming.sources import stream_stream_join
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        stream_from_parquet,
-    )
 
-    if sf_dir not in _JOIN_STREAM_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_join_stream_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        # one cached 4-column projection feeds the min/max probe and all six
-        # tercile writes (uncached: 7 full events scans dominate the one-time
-        # fixture build)
-        ev = (
-            _t(spark, sf_dir, "events")
-            .select("user_id", "ts", "value", "event_type")
-            .filter(F.col("event_type").isin("click", "view"))
-            .persist()
+    def stream() -> DataFrame:
+        clicks, views = _join_stream_sides(spark, sf_dir)
+        return stream_stream_join(
+            clicks,
+            views.select(
+                "user_id", F.col("ts").alias("vts"), F.col("value").alias("vvalue")
+            ),
+            "user_id", "ts", "vts", max_delay="1 hour",
+            watermark="1 hour", how=how,
+        ).select(
+            # COALESCE keys the NULL-extended sides apart in full-outer
+            # (l.user_id is NULL on unmatched RIGHT rows); for inner/left
+            # it is just l.user_id
+            F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
+            F.col("l.ts").alias("click_ts"),
+            F.col("l.value").alias("click_value"),
+            F.col("r.vts").alias("view_ts"),
+            F.col("r.vvalue").alias("view_value"),
         )
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        cuts = [lo + (hi - lo + 1) * k // 3 for k in (1, 2)]
-        bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
-        for etype, side in (("click", "click"), ("view", "view")):
-            src = os.path.join(root, side)
-            os.makedirs(src)
-            rows = ev.filter(F.col("event_type") == etype)
-            for b, (s, e) in enumerate(bounds):
-                part_df = rows
-                if s is not None:
-                    part_df = part_df.filter(F.unix_micros("ts") >= s)
-                if e is not None:
-                    part_df = part_df.filter(F.unix_micros("ts") < e)
-                stage = os.path.join(root, f"stage_{side}_{b}")
-                part_df.select("user_id", "ts", "value").coalesce(1).write.parquet(
-                    stage
-                )
-                (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-                dst = os.path.join(src, f"batch{b}.parquet")
-                os.rename(part, dst)
-                os.utime(dst, (1_700_000_000 + 10 * b,) * 2)
-        # per-side far-future SENTINEL rows (the q_agg_stream mechanism,
-        # here for the LEFT-OUTER drain): the global watermark is the MIN
-        # over both streams' watermarks, so BOTH sides carry one. TWO
-        # sentinel batches per side, because join-state eviction applies
-        # the watermark computed from the PREVIOUS batch's max event time
-        # — batch 4 is the data batch in which the batch-3-derived
-        # far-future watermark evicts every real left row and emits the
-        # unmatched ones with NULLs (availableNow does not reliably run a
-        # trailing no-data batch for join state). Distinct negative user
-        # ids (-1 clicks / -2 views) can never match anything, so the
-        # INNER drain's result is unchanged; the outer drain filters
-        # them out.
-        for s, sentinel_us in enumerate(
-            (int(hi) + 40 * 86400 * 1_000_000, int(hi) + 41 * 86400 * 1_000_000)
-        ):
-            for side, uid in (("click", -1), ("view", -2)):
-                stage = os.path.join(root, f"stage_{side}_sentinel{s}")
-                spark.createDataFrame(
-                    [(uid, sentinel_us, 0.0)], "user_id long, us long, value double"
-                ).select(
-                    "user_id", F.timestamp_micros(F.col("us")).alias("ts"), "value"
-                ).coalesce(1).write.parquet(stage)
-                (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-                dst = os.path.join(root, side, f"batch{3 + s}.parquet")
-                os.rename(part, dst)
-                os.utime(dst, (1_700_000_000 + 30 + 10 * s,) * 2)
-        ev.unpersist()
-        _JOIN_STREAM_DIRS[sf_dir] = root
 
-    root = _JOIN_STREAM_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    clicks = stream_from_parquet(
-        spark, os.path.join(root, "click"), schema, max_files_per_trigger=1
-    )
-    views = stream_from_parquet(
-        spark, os.path.join(root, "view"), schema, max_files_per_trigger=1
-    ).select(
-        "user_id", F.col("ts").alias("vts"), F.col("value").alias("vvalue")
-    )
-    joined = stream_stream_join(
-        clicks, views, "user_id", "ts", "vts", max_delay="1 hour",
-        watermark="1 hour", how=how,
-    ).select(
-        # COALESCE keys the NULL-extended sides apart in full-outer
-        # (l.user_id is NULL on unmatched RIGHT rows); for inner/left
-        # it is just l.user_id
-        F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
-        F.col("l.ts").alias("click_ts"),
-        F.col("l.value").alias("click_value"),
-        F.col("r.vts").alias("view_ts"),
-        F.col("r.vvalue").alias("view_value"),
-    )
     # NOTE: the sentinel filter must run on the DRAINED BATCH table, not
     # inside the streaming plan — `user_id >= 0` does not reference the
     # event-time column, so Catalyst pushes it below EventTimeWatermark
     # into the parquet scan, the sentinel rows never reach the watermark
     # accumulator, and the final watermark never advances past the real
     # data (observed: the last unmatched clicks never evict/emit).
-    _JOIN_STREAM_SEQ[0] += 1
-    table = f"join_stream_{how}_graded_{_JOIN_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_available_now(joined, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _JOIN_STREAM_TABLES[cache_key] = table
-    return _drop_join_sentinels(spark.table(table))
+    return _drop_join_sentinels(
+        _memory_drain(spark, sf_dir, f"join_stream_{how}", stream)
+    )
 
 
-_AGG_STREAM_DIRS: dict[str, str] = {}
-_AGG_STREAM_SEQ = [0]
-_AGG_STREAM_TABLES: dict[tuple[str, str], str] = {}
-_SLIDE_STREAM_TABLES: dict[tuple[str, str], str] = {}
+# stream schema of the agg-stream fixture's event batches
+_AGG_STREAM_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
+
+
+def _agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event stream of the agg-stream fixture shared by the agg/slide/
+    session/sessionize/bloom drains, built once per (application,
+    sf_dir): three TIME-ORDERED ts-tercile batches plus a far-future
+    SENTINEL batch, one file per trigger. See q_agg_stream for the
+    mechanism. Caveat (documented, not triggered — graded data has zero
+    NULL ts at every sf): a NULL-ts row would fail every tercile
+    predicate and silently drop from the fixture while staying in the
+    batch oracles; streaming event-time operators would drop it anyway
+    (no watermark position), so the oracle, not the fixture, is where
+    NULL-ts handling would have to be added if the data ever gained such
+    rows."""
+    from bigdata_etl_customer360_spark.operators.util import scoped_cache
+
+    def frames() -> list[DataFrame]:
+        ev = scoped_cache(
+            _t(spark, sf_dir, "events").select("user_id", "ts", "event_type", "value")
+        )
+        lo, hi = ev.agg(
+            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+        ).first()
+        # sentinel: one row 40 days past max event time — its only job
+        # is to advance the watermark so every REAL window finalizes
+        sentinel = spark.createDataFrame(
+            [(-1, int(hi) + 40 * 86400 * 1_000_000, "zz_sentinel", 0.0)],
+            "user_id long, us long, event_type string, value double",
+        ).select(
+            "user_id", F.timestamp_micros(F.col("us")).alias("ts"), "event_type", "value"
+        )
+        return [ev.filter(in_batch) for in_batch in _ts_terciles(lo, hi)] + [sentinel]
+
+    return _staged_stream(
+        spark, sf_dir, "agg_stream_source", _AGG_STREAM_SCHEMA, frames
+    )[1]
 
 
 def q_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5540,131 +5346,31 @@ def q_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py). The oracle is the SAME SQL that grades
     the batch `window_tumbling` — one ground truth, two execution
     models (the join_stream pair-design). Scratch dirs and the drained
-    sink are session-scoped; state partitions scoped to 8 around the
-    drain (the join_stream state-store sizing note)."""
-    import os
+    sink are fixtures; state partitions scoped to 8 around the drain
+    (see _memory_drain)."""
+    from bigdata_etl_customer360_spark.streaming.windows import tumbling_agg
 
-    tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _AGG_STREAM_TABLES:
-        return spark.table(_AGG_STREAM_TABLES[cache_key])
-
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        stream_from_parquet,
-        tumbling_agg,
-    )
-
-    root = _agg_stream_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("ts", TimestampType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    stream = stream_from_parquet(
-        spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-    )
-    agg = tumbling_agg(
-        stream,
-        "ts",
-        "1 day",
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(27,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        ],
-        group_cols=["event_type"],
-        watermark="1 hour",
-    ).select(
-        F.col("window_start").alias("day_ts"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-    _AGG_STREAM_SEQ[0] += 1
-    table = f"agg_stream_graded_{_AGG_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_available_now(agg, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _AGG_STREAM_TABLES[cache_key] = table
-    return out
-
-
-def _agg_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir) the time-ordered tercile + sentinel source
-    directory shared by the agg/slide/session/sessionize drains; returns
-    its root. See q_agg_stream for the mechanism. Caveat (documented, not
-    triggered — graded data has zero NULL ts at every sf): a NULL-ts row
-    would fail both tercile bound filters and silently drop from the
-    fixture while staying in the batch oracles; streaming event-time
-    operators would drop it anyway (no watermark position), so the
-    oracle, not the fixture, is where NULL-ts handling would have to be
-    added if the data ever gained such rows."""
-    import os
-
-    if sf_dir not in _AGG_STREAM_DIRS:
-        import atexit
-        import glob
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="c360_agg_stream_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        ev = (
-            _t(spark, sf_dir, "events")
-            .select("user_id", "ts", "event_type", "value")
-            .persist()
-        )
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        cuts = [lo + (hi - lo + 1) * k // 3 for k in (1, 2)]
-        bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
-        for b, (s, e) in enumerate(bounds):
-            part_df = ev
-            if s is not None:
-                part_df = part_df.filter(F.unix_micros("ts") >= s)
-            if e is not None:
-                part_df = part_df.filter(F.unix_micros("ts") < e)
-            stage = os.path.join(root, f"stage{b}")
-            part_df.coalesce(1).write.parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(src, f"batch{b}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (1_700_000_000 + 10 * b,) * 2)
-        # sentinel: one row 40 days past max event time — its only job
-        # is to advance the watermark so every REAL window finalizes
-        sentinel_us = int(hi) + 40 * 86400 * 1_000_000
-        stage = os.path.join(root, "stage_sentinel")
-        spark.createDataFrame(
-            [(-1, sentinel_us, "zz_sentinel", 0.0)],
-            "user_id long, us long, event_type string, value double",
+    return _memory_drain(
+        spark, sf_dir, "agg_stream",
+        lambda: tumbling_agg(
+            _agg_stream(spark, sf_dir),
+            "ts",
+            "1 day",
+            aggs=[
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(27,2)"))
+                .cast("double")
+                .alias("sum_value"),
+            ],
+            group_cols=["event_type"],
+            watermark="1 hour",
         ).select(
-            "user_id", F.timestamp_micros(F.col("us")).alias("ts"), "event_type", "value"
-        ).coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src, "batch3.parquet")
-        os.rename(part, dst)
-        os.utime(dst, (1_700_000_000 + 30,) * 2)
-        ev.unpersist()
-        _AGG_STREAM_DIRS[sf_dir] = root
-    return _AGG_STREAM_DIRS[sf_dir]
+            F.col("window_start").alias("day_ts"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        ),
+    )
 
 
 def q_slide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5681,70 +5387,30 @@ def q_slide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     skill); the oracle regenerates the slide grid per event with
     UNNEST([0..3]) on epoch_us integers: start = (t div S - i) * S,
     kept while start > t - W."""
-    import os
+    from bigdata_etl_customer360_spark.streaming.windows import sliding_agg
 
-    tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _SLIDE_STREAM_TABLES:
-        return spark.table(_SLIDE_STREAM_TABLES[cache_key])
-
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
+    return _memory_drain(
+        spark, sf_dir, "slide_stream",
+        lambda: sliding_agg(
+            _agg_stream(spark, sf_dir),
+            "ts",
+            "1 day",
+            "6 hours",
+            aggs=[
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(27,2)"))
+                .cast("double")
+                .alias("sum_value"),
+            ],
+            group_cols=["event_type"],
+            watermark="1 hour",
+        ).select(
+            F.unix_micros("window_start").alias("ws_us"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        ),
     )
-
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        sliding_agg,
-        stream_from_parquet,
-    )
-
-    root = _agg_stream_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("ts", TimestampType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    stream = stream_from_parquet(
-        spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-    )
-    agg = sliding_agg(
-        stream,
-        "ts",
-        "1 day",
-        "6 hours",
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(27,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        ],
-        group_cols=["event_type"],
-        watermark="1 hour",
-    ).select(
-        F.unix_micros("window_start").alias("ws_us"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-    _AGG_STREAM_SEQ[0] += 1
-    table = f"slide_stream_graded_{_AGG_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_available_now(agg, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _SLIDE_STREAM_TABLES[cache_key] = table
-    return out
-
-
-_SESSION_STREAM_TABLES: dict[tuple[str, str], str] = {}
 
 
 def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5764,70 +5430,30 @@ def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one session; boundary pinned in test_streaming), end = last
     event + 30min. One ground truth, two execution models (q_sessionize
     grades the batch twin)."""
-    import os
+    from bigdata_etl_customer360_spark.streaming.windows import session_agg
 
-    tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _SESSION_STREAM_TABLES:
-        return spark.table(_SESSION_STREAM_TABLES[cache_key])
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
+    return _memory_drain(
+        spark, sf_dir, "session_stream",
+        lambda: session_agg(
+            _agg_stream(spark, sf_dir),
+            "ts",
+            "30 minutes",
+            aggs=[
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(27,2)"))
+                .cast("double")
+                .alias("sum_value"),
+            ],
+            group_cols=["user_id"],
+            watermark="1 hour",
+        ).select(
+            F.unix_micros("window_start").alias("ws_us"),
+            F.unix_micros("window_end").alias("we_us"),
+            "user_id",
+            "n_events",
+            "sum_value",
+        ),
     )
-
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        session_agg,
-        stream_from_parquet,
-    )
-
-    root = _agg_stream_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    stream = stream_from_parquet(
-        spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-    )
-    agg = session_agg(
-        stream,
-        "ts",
-        "30 minutes",
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(27,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        ],
-        group_cols=["user_id"],
-        watermark="1 hour",
-    ).select(
-        F.unix_micros("window_start").alias("ws_us"),
-        F.unix_micros("window_end").alias("we_us"),
-        "user_id",
-        "n_events",
-        "sum_value",
-    )
-    _AGG_STREAM_SEQ[0] += 1
-    table = f"session_stream_graded_{_AGG_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_available_now(agg, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _SESSION_STREAM_TABLES[cache_key] = table
-    return out
-
-
-_SESSIONIZE_STREAM_TABLES: dict[tuple[str, str], str] = {}
 
 
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5848,54 +5474,19 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user -1) structurally never times out (its timeout sits gap past
     the final watermark) and is additionally dropped from the drained
     batch table."""
-    import os
-
-    tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _SESSIONIZE_STREAM_TABLES:
-        return _drop_join_sentinels(
-            spark.table(_SESSIONIZE_STREAM_TABLES[cache_key])
-        )
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from bigdata_etl_customer360_spark.streaming.stateful import sessionize
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        stream_from_parquet,
-    )
 
-    root = _agg_stream_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
+    return _drop_join_sentinels(
+        _memory_drain(
+            spark, sf_dir, "sessionize_stream",
+            # event_type stays out of the pandas state function's input
+            lambda: sessionize(
+                _agg_stream(spark, sf_dir).drop("event_type"),
+                gap_seconds=1800,
+                watermark="1 hour",
+            ),
+        )
     )
-    stream = stream_from_parquet(
-        spark, os.path.join(root, "src"), schema, max_files_per_trigger=1
-    )
-    sessions = sessionize(stream, gap_seconds=1800, watermark="1 hour")
-    _AGG_STREAM_SEQ[0] += 1
-    table = f"sessionize_stream_graded_{_AGG_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_available_now(sessions, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _SESSIONIZE_STREAM_TABLES[cache_key] = table
-    return _drop_join_sentinels(spark.table(table))
-
-
-_ASOF_STREAM_TABLES: dict[tuple[str, str], str] = {}
 
 
 def q_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5914,57 +5505,19 @@ def q_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the latest prior view is older than 1h there is no view in the
     window at all. Same ground truth family as join_stream (built-in
     range join) — three execution models over one fixture."""
-    tune_session(spark)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _ASOF_STREAM_TABLES:
-        return _drop_join_sentinels(spark.table(_ASOF_STREAM_TABLES[cache_key]))
-
-    import os
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from bigdata_etl_customer360_spark.streaming.stateful import asof_join_stream
-    from bigdata_etl_customer360_spark.streaming.windows import (
-        run_available_now,
-        stream_from_parquet,
-    )
 
-    # ensure the fixture (built lazily by the inner/outer drains) exists
-    if sf_dir not in _JOIN_STREAM_DIRS:
-        q_join_stream(spark, sf_dir)
-    root = _JOIN_STREAM_DIRS[sf_dir]
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-        ]
+    return _drop_join_sentinels(
+        _memory_drain(
+            spark, sf_dir, "asof_stream",
+            lambda: asof_join_stream(
+                *_join_stream_sides(spark, sf_dir),
+                on="user_id",
+                tolerance_seconds=3600,
+                watermark="1 hour",
+            ),
+        )
     )
-    clicks = stream_from_parquet(
-        spark, os.path.join(root, "click"), schema, max_files_per_trigger=1
-    )
-    views = stream_from_parquet(
-        spark, os.path.join(root, "view"), schema, max_files_per_trigger=1
-    )
-    joined = asof_join_stream(
-        clicks, views, on="user_id", tolerance_seconds=3600, watermark="1 hour"
-    )
-    _JOIN_STREAM_SEQ[0] += 1
-    table = f"asof_stream_graded_{_JOIN_STREAM_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_available_now(joined, table)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _ASOF_STREAM_TABLES[cache_key] = table
-    return _drop_join_sentinels(spark.table(table))
 
 
 def _committed_ledger_names(here: str) -> "set[str] | None":

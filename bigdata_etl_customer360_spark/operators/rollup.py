@@ -68,15 +68,6 @@ def _check(measures: Sequence[Measure]) -> list[Measure]:
     return ms
 
 
-def _state_cols(measures: Sequence[Measure]) -> list[str]:
-    cols = []
-    for i, (_name, kind, _col) in enumerate(measures):
-        cols.append(f"_s{i}")
-        if kind == "avg":
-            cols.append(f"_c{i}")
-    return cols
-
-
 def rollup_state(
     df: DataFrame, keys: Sequence[str], measures: Sequence[Measure]
 ) -> DataFrame:

@@ -239,16 +239,17 @@ def range_prefix_offsets(df, order_cols, total_expr):
     order columns, pin partition ids with an eager localCheckpoint (the
     offsets collect and the downstream projection MUST see the same
     placement), collect per-partition totals (|partitions| rows — bounded
-    driver work), and return ``(binned, off_expr)`` where ``off_expr``
-    maps each row's ``_pid`` to the cumulative total of all earlier
-    partitions. ``total_expr`` is the per-partition aggregate whose
-    running total is being distributed (``F.sum(col)`` for value cumsums,
+    work on the Spark driver), and return ``(binned, off_expr, total)``:
+    ``off_expr`` maps each row's ``_pid`` to the cumulative total of all
+    earlier partitions, and ``total`` is the grand total across all
+    partitions.
+    ``total_expr`` is the per-partition aggregate whose running total is
+    being distributed (``F.sum(col)`` for value cumsums,
     ``F.count(lit(1))`` for row numbering).
 
-    Returns ``(binned, off_expr, total)`` — ``total`` is the grand total
-    across all partitions (r17: callers like ``rfm_scores`` need the row
-    count the collect already computed; returning it saves them a
-    separate count job).
+    ``total`` exists because callers like ``rfm_scores`` need the row
+    count the collect already computed (r17); returning it saves them a
+    separate count job.
 
     Raises if the input already carries a ``_pid`` column — silently
     overwriting it would return partition ids in place of user data.

@@ -45,17 +45,21 @@ _BUILD_CONF: dict[str, str] = {
 # trips, ~2-5 ms) — ~1-2 s across a 235-query bench run for settings that
 # never change after the first application (r17). A new wrapper object
 # (fresh session, clone, restart) re-tunes; dead wrappers drop out of the
-# set automatically.
+# set automatically. The time zone is the exception: a caller that moves
+# it between queries would silently shift every date/timestamp result,
+# so it is re-pinned on every call (one py4j round trip).
 _TUNED: weakref.WeakSet = weakref.WeakSet()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (once per
-    session object — see ``_TUNED``).
+    """Apply the engine's runtime confs to an existing session: the UTC
+    time zone on every call, the rest once per session object (see
+    ``_TUNED``).
 
     Used by ``__spark_entry__.queries()`` where the driver owns the
     session: only runtime-mutable confs are touched.
     """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     if spark in _TUNED:
         return spark
     for k, v in _RUNTIME_CONF.items():

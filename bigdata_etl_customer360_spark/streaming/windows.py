@@ -29,11 +29,12 @@ from pyspark.sql.types import StructType
 def stream_from_parquet(
     spark: SparkSession,
     path: str,
-    schema: StructType,
+    schema: StructType | str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream with a PINNED schema (streaming reads do not
-    infer; unbounded sources can't be scanned ahead of time)."""
+    infer; unbounded sources can't be scanned ahead of time), given as a
+    StructType or a DDL string."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

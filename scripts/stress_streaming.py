@@ -25,14 +25,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.types import (  # noqa: E402
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 import __spark_entry__ as entry  # noqa: E402
 from bigdata_etl_customer360_spark.session import get_session  # noqa: E402
@@ -42,23 +34,7 @@ from bigdata_etl_customer360_spark.streaming.sources import (  # noqa: E402
 from bigdata_etl_customer360_spark.streaming.windows import (  # noqa: E402
     session_agg,
     sliding_agg,
-    stream_from_parquet,
     tumbling_agg,
-)
-
-AGG_SCHEMA = StructType(
-    [
-        StructField("ts", TimestampType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
-KEYED_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-    ]
 )
 
 
@@ -93,17 +69,18 @@ def main() -> None:
     n_days = ev.select(F.to_date("ts")).distinct().count()
     print(f"# input: {n_events} events, {n_users} users, {n_types} types, {n_days} days")
 
-    agg_root = entry._agg_stream_fixture(spark, sf_dir)
-    src = os.path.join(agg_root, "src")
-
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(27,2)")).cast("double").alias("sv"),
     ]
 
-    stream = stream_from_parquet(spark, src, AGG_SCHEMA, max_files_per_trigger=1)
+    # the graded agg-stream fixture (terciles + sentinel), a fresh
+    # stream over it per drain
     rows, mem = drain_with_progress(
-        tumbling_agg(stream, "ts", "1 day", aggs, ["event_type"], "1 hour"),
+        tumbling_agg(
+            entry._agg_stream(spark, sf_dir), "ts", "1 day", aggs,
+            ["event_type"], "1 hour",
+        ),
         "st_tumbling",
     )
     bound = (n_days + 2) * (n_types + 1)
@@ -112,9 +89,11 @@ def main() -> None:
         f"rows/bound {rows / bound:.2f})  mem {mem / 1e6:.1f} MB"
     )
 
-    stream = stream_from_parquet(spark, src, AGG_SCHEMA, max_files_per_trigger=1)
     rows, mem = drain_with_progress(
-        sliding_agg(stream, "ts", "1 day", "6 hours", aggs, ["event_type"], "1 hour"),
+        sliding_agg(
+            entry._agg_stream(spark, sf_dir), "ts", "1 day", "6 hours", aggs,
+            ["event_type"], "1 hour",
+        ),
         "st_sliding",
     )
     bound = (4 * n_days + 8) * (n_types + 1)
@@ -123,9 +102,11 @@ def main() -> None:
         f"rows/bound {rows / bound:.2f})  mem {mem / 1e6:.1f} MB"
     )
 
-    stream = stream_from_parquet(spark, src, KEYED_SCHEMA, max_files_per_trigger=1)
     rows, mem = drain_with_progress(
-        session_agg(stream, "ts", "30 minutes", aggs, ["user_id"], "1 hour"),
+        session_agg(
+            entry._agg_stream(spark, sf_dir), "ts", "30 minutes", aggs,
+            ["user_id"], "1 hour",
+        ),
         "st_session",
     )
     # sessions alive in one watermark lag: bounded by total sessions in
@@ -136,14 +117,10 @@ def main() -> None:
         f"rows/sessions {rows / n_sessions:.2f})  mem {mem / 1e6:.1f} MB"
     )
 
-    entry.q_join_stream(spark, sf_dir)  # builds the click/view fixture
-    root = entry._JOIN_STREAM_DIRS[sf_dir]
-    clicks = stream_from_parquet(
-        spark, os.path.join(root, "click"), KEYED_SCHEMA, max_files_per_trigger=1
+    clicks, views = entry._join_stream_sides(spark, sf_dir)
+    views = views.select(
+        "user_id", F.col("ts").alias("vts"), F.col("value").alias("vvalue")
     )
-    views = stream_from_parquet(
-        spark, os.path.join(root, "view"), KEYED_SCHEMA, max_files_per_trigger=1
-    ).select("user_id", F.col("ts").alias("vts"), F.col("value").alias("vvalue"))
     joined = stream_stream_join(
         clicks, views, "user_id", "ts", "vts", max_delay="1 hour",
         watermark="1 hour",

@@ -28,3 +28,37 @@ def test_query_materializes(spark, name):
     pdf = df.toPandas()  # full materialization — executes every closure
     assert len(pdf.columns) > 0
     assert len(pdf) >= 0
+
+
+def test_fixture_registry_builds_once_per_key(spark):
+    """One build per (application, sf_dir, name); a second sf_dir builds
+    its own. A build that returns None (a catalog-table writer) is
+    memoized like any other."""
+    calls = []
+
+    def build(tag, value):
+        return lambda: calls.append(tag) or value
+
+    a = entrymod._fixture(spark, "/sf/a", "registry_probe", build("a", "dir-a"))
+    assert entrymod._fixture(spark, "/sf/a", "registry_probe", build("a", "x")) == a
+    b = entrymod._fixture(spark, "/sf/b", "registry_probe", build("b", "dir-b"))
+    assert (a, b) == ("dir-a", "dir-b")
+    for _ in range(2):
+        assert entrymod._fixture(spark, "/sf/a", "registry_none", build("n", None)) is None
+    assert calls == ["a", "b", "n"]
+
+
+def test_tune_session_repins_utc_after_caller_moves_it(spark):
+    """A caller that moves the session time zone between queries gets UTC
+    back on the next query: the pin is re-applied on every call, not
+    memoized with the other runtime confs."""
+    from bigdata_etl_customer360_spark.session import tune_session
+
+    tz = "spark.sql.session.timeZone"
+    tune_session(spark)
+    spark.conf.set(tz, "America/Los_Angeles")
+    try:
+        tune_session(spark)
+        assert spark.conf.get(tz) == "UTC"
+    finally:
+        spark.conf.set(tz, "UTC")

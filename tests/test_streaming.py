@@ -2526,3 +2526,27 @@ def test_stream_index_ivfpq_guards(spark, tmp_path):
             _idx_drain(spark, tmp_path, src, f"{prefix}")
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_stage_batches_one_file_per_batch_in_trigger_order(spark, tmp_path):
+    """The stateful queries' batch stager: each frame lands as ONE parquet
+    file with strictly increasing pinned mtimes (batches 3 and 4, where
+    the watermark sentinels go, included) holding exactly that frame's
+    rows, so a maxFilesPerTrigger=1 stream reads batch b at trigger b."""
+    import __spark_entry__ as entry
+
+    frames = [
+        spark.createDataFrame(
+            [(10 * b + i, float(i)) for i in range(6)], "id long, v double"
+        ).repartition(3)
+        for b in range(5)
+    ]
+    src = str(tmp_path / "src")
+    entry._stage_batches(src, frames)
+    names = sorted(os.listdir(src))
+    assert names == [f"batch{b}.parquet" for b in range(5)]
+    mtimes = [os.path.getmtime(os.path.join(src, n)) for n in names]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+    for name, frame in zip(names, frames):
+        got = spark.read.parquet(os.path.join(src, name)).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, frame.collect()))
